@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /**
  * The k-hop path-pattern query engine — the reference's entire external
@@ -26,11 +25,11 @@ import org.apache.spark.sql.expressions.Window
  *    per-hop join only shuffles the one collection-pair slice it needs;
  *  - `uniqueEdges: path` = an accumulated set of undirected edge ids checked
  *    with array_contains (k ≤ 5, so the array is tiny);
- *  - the hierarchy BFS is an iterative DataFrame loop with early exit on an
- *    empty frontier and localCheckpoint every few iterations to cut lineage
- *    (depth cap 64, AqlQuerySetBuilder.java:96);
- *  - longest-per-start = max_by over (path, chain length) — one hash agg,
- *    not a sort.
+ *  - the hierarchy tail is one row function of the path's last vertex
+ *    over the single-label slice, collected once per call and held on the
+ *    driver (depth cap 64, AqlQuerySetBuilder.java:96): the longest walk
+ *    per start, ties broken by the smallest `(to_coll, to_key)` at each
+ *    step — no per-level Spark job.
  *
  * At 100 TB: the anchor collection (CS in the reference) is tiny and the
  * hop-1 join broadcasts it; ontology-sized collections shuffle on
@@ -196,6 +195,14 @@ object PathQueries {
     paths.select(col("vs").as("vertices"), col("es").as("edges"))
   }
 
+  /** One hierarchy tail: the vertices and edges it appends to a path,
+    * field for field as [[kHop]] writes them. */
+  private[graft] final case class TailVertex(collection: String, key: String)
+  private[graft] final case class TailEdge(from_coll: String, from_key: String,
+                                           to_coll: String, to_key: String,
+                                           label: String)
+  private[graft] final case class Tail(tvs: Seq[TailVertex], tes: Seq[TailEdge])
+
   /**
    * Variable-length hierarchy extension (getQuerySetIn*WithHierarchy,
    * AqlQuerySetBuilder.java:88-119): from each path's last vertex, walk
@@ -205,284 +212,75 @@ object PathQueries {
    * The AQL `PRUNE label NOT IN [@label]` + `FILTER ALL ==` pair is
    * equivalent to pre-filtering the edge table to the single label before
    * the walk (SURVEY.md §4) — simpler and prunes at the scan.
+   *
+   * Walk semantics: a tail is a longest walk of at most `maxDepth` edges;
+   * vertices and edges may repeat, so a cycle extends to the cap. Among
+   * equal-length longest walks the tail takes, at each step, the
+   * successor with the smallest `(to_coll, to_key)` (String order) —
+   * AQL's `LIMIT 1` keeps an arbitrary one, this engine a fixed one.
+   *
+   * Runs one action: the label slice is collected to the driver when the
+   * call is made; the returned frame stays lazy.
    */
   def withHierarchy(basePaths: DataFrame, edges: DataFrame, label: String,
-                    maxDepth: Int = 64): DataFrame = {
-    // the single-label slice is read once per BFS level — materialize it
-    // eagerly (localCheckpoint, ContextCleaner-reclaimed — not a leaked
-    // CacheManager entry) and, when it is broadcast-sized, pin it to the
-    // broadcast side so the frontier never shuffles between levels. The
-    // gate is estimated BYTES against the session's own
-    // autoBroadcastJoinThreshold (a row-count gate would happily broadcast
-    // hundreds of MB of long keys and OOM the driver at scale). When the
-    // slice EXCEEDS the gate, prefer [[withHierarchyBucketed]]: there the
-    // slice is a bucketed scan already partitioned on the join key, so it
-    // never re-shuffles per level either.
-    val hier0 = edges.filter(col("label") === label)
-      .select(col("from_coll"), col("from_key"), col("to_coll"),
-        col("to_key"), col("label"))
-      .localCheckpoint(true)
-    val sz = hier0.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(length(concat_ws("", col("from_coll"), col("from_key"),
-        col("to_coll"), col("to_key"), col("label")))), lit(0L)).as("chars"))
-      .head()
-    // UTF-16 string payload + ~48 B per-row struct/field overhead
-    val estBytes = sz.getLong(1) * 2 + sz.getLong(0) * 48
-    val confStr = basePaths.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val threshold =
-      if (confStr.trim.startsWith("-")) -1L
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(confStr)
-    val hier = if (threshold > 0 && estBytes <= threshold) broadcast(hier0)
-               else hier0
-    hierarchyLoop(basePaths, hier, maxDepth)
-  }
+                    maxDepth: Int = 64): DataFrame =
+    hierarchyWalk(basePaths, edges.filter(col("label") === label)
+      .select(col("from_coll"), col("from_key"), col("to_coll"), col("to_key")),
+      label, maxDepth)
 
-  /** [[withHierarchy]] over the bucketed `<prefix>_by_src` hop table
-    * (GraphStore.writeHopTables layout) — the 100 TB variant: the
-    * single-label directed slice (`orient = 'f'`, label pushed to the
-    * scan) arrives hash-partitioned on its join key from the bucketing,
-    * so the edge side NEVER shuffles at any BFS level no matter how far
-    * past the broadcast gate the label slice grows; only the (small)
-    * frontier moves. Result ≡ [[withHierarchy]] on the directed view
-    * (spec-pinned); per-level edge-side shuffle-freedom is plan-asserted
-    * in QueryCatalogSpec via [[hierarchyStep]]. */
+  /** [[withHierarchy]] with its label slice read from the bucketed
+    * `<prefix>_by_src` hop table (GraphStore.writeHopTables layout): the
+    * directed rows (`orient = 'f'`) of the label, pushed to the scan.
+    * Result ≡ [[withHierarchy]] on the same graph (spec-pinned). */
   def withHierarchyBucketed(spark: SparkSession, prefix: String,
                             basePaths: DataFrame, label: String,
-                            maxDepth: Int = 64): DataFrame = {
-    val hier = spark.table(s"${prefix}_by_src")
+                            maxDepth: Int = 64): DataFrame =
+    hierarchyWalk(basePaths, spark.table(s"${prefix}_by_src")
       .filter(col("orient") === "f" && col("label") === label)
-      .select(col("src_coll").as("from_coll"), col("src_key").as("from_key"),
-        col("dst_coll").as("to_coll"), col("dst_key").as("to_key"),
-        col("label"))
-    hierarchyLoop(basePaths, hier, maxDepth)
-  }
+      .select(col("src_coll"), col("src_key"), col("dst_coll"), col("dst_key")),
+      label, maxDepth)
 
-  /** One BFS level: extend every frontier chain by one `hier` edge.
-    * Separated so specs can plan-assert the per-level join (the loop's
-    * eager localCheckpoint hides the join plan from the outside). The
-    * projection aliases keep the bucketed scan's (src_coll, src_key)
-    * partitioning attached to (from_coll, from_key) — Spark's
-    * alias-aware output partitioning — which is what makes the bucketed
-    * variant's per-level join edge-shuffle-free. */
-  private[graft] def hierarchyStep(frontier: DataFrame, hier: DataFrame): DataFrame =
-    frontier.join(hier,
-        frontier("cur_coll") === hier("from_coll") &&
-        frontier("cur_key") === hier("from_key"))
-      .select(
-        col("pid"),
-        concat(col("tvs"), array(struct(
-          col("to_coll").as("collection"), col("to_key").as("key")))).as("tvs"),
-        concat(col("tes"), array(struct(
-          col("from_coll"), col("from_key"), col("to_coll"), col("to_key"),
-          col("label")))).as("tes"),
-        col("to_coll").as("cur_coll"), col("to_key").as("cur_key"))
-
-  private def hierarchyLoop(basePaths: DataFrame, hier: DataFrame,
-                            maxDepth: Int): DataFrame =
-    hierarchyLoopThin(basePaths, hier, maxDepth)
-
-  /** The original array-carrying walk, kept as the THIN loop's
-    * equivalence witness (spec-pinned identical on forked, capped, and
-    * non-extendable fixtures). Its scale flaw, measured at the sf10
-    * two-decade rehearsal: every level localCheckpoints the FULL
-    * growing (tvs, tes) tail arrays and the winner pick unions every
-    * level's array rows — at 2.9 M paths × 4 levels the walk cost 64 s
-    * warm while the 3-hop base join took 1.6 s. The thin loop carries
-    * ~32 B/row frontiers instead and assembles arrays exactly once. */
-  private[graft] def hierarchyLoopDense(basePaths: DataFrame, hier: DataFrame,
-                            maxDepth: Int): DataFrame = {
-    val base = basePaths
-      .withColumn("pid", monotonically_increasing_id())
-      .withColumn("cur_coll", element_at(col("vertices"), -1).getField("collection"))
-      .withColumn("cur_key", element_at(col("vertices"), -1).getField("key"))
-      .localCheckpoint(true)
-
-    // frontier: pid → growing tail; keep only still-extendable chains
-    var frontier = base.select(
-      col("pid"),
-      array().cast("array<struct<collection:string,key:string>>").as("tvs"),
-      array().cast("array<struct<from_coll:string,from_key:string,to_coll:string,to_key:string,label:string>>").as("tes"),
-      col("cur_coll"), col("cur_key"))
-
-    // tails per level (level 0 = the empty tail, so every pid survives);
-    // the longest-per-start winner is picked ONCE after the loop instead
-    // of re-aggregating every level
-    var levels = List(frontier.select(col("pid"), col("tvs"), col("tes")))
-    var depth = 0
-    var done = false
-    while (!done && depth < maxDepth) {
-      // the row count rides the checkpoint job as an observe metric —
-      // ONE job per level, not a checkpoint job plus an isEmpty job
-      // (at depth 64 the scheduling overhead of the second job is the
-      // dominant cost of the whole walk — measured 16.3 → 8.1 s on the
-      // q233 80-node chain at sf0.01)
-      val obs = org.apache.spark.sql.Observation()
-      val step = hierarchyStep(frontier, hier)
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true) // cut lineage each level (depth ≤ 64)
-      if (obs.get("rows").asInstanceOf[Long] == 0L) done = true
+  /** The hierarchy walk over a `(from_coll, from_key, to_coll, to_key)`
+    * slice of one label. The slice is held on the driver (it is an
+    * ontology's single-label hierarchy, thousands of rows at Cell KN
+    * scale) and shipped with the row function that computes each tail
+    * from its path's last vertex. */
+  private def hierarchyWalk(basePaths: DataFrame, slice: DataFrame,
+                            label: String, maxDepth: Int): DataFrame = {
+    type V = (String, String)
+    // successors sorted by (to_coll, to_key): the first one that still
+    // reaches far enough is the tie-break winner. Null endpoints never
+    // match a join, so they never extend a walk either.
+    val succ: Map[V, Array[V]] = slice.na.drop().collect()
+      .groupMap(r => (r.getString(0), r.getString(1)))(r => (r.getString(2), r.getString(3)))
+      .map { case (v, ts) => v -> ts.sorted }
+    // reach(v): edges in the longest walk from v of at most maxDepth
+    // edges (absent = 0). Round k holds the longest walk of at most k
+    // edges, so a cycle grows to the cap and a DAG stops at its height.
+    @annotation.tailrec
+    def grow(reach: Map[V, Int], round: Int): Map[V, Int] =
+      if (round == maxDepth) reach
       else {
-        levels ::= step.select(col("pid"), col("tvs"), col("tes"))
-        frontier = step
-        depth += 1
+        val next = succ.map { case (v, ts) => v -> (1 + ts.map(reach.getOrElse(_, 0)).max) }
+        if (next == reach) reach else grow(next, round + 1)
       }
-    }
-    // longest-per-start: a longer tail always supersedes (W2 — SORT
-    // LENGTH DESC LIMIT 1). Among equal-length tails AQL keeps an
-    // arbitrary one; max_by keeps determinism-enough semantics.
-    val best = levels.reduce(_.unionByName(_))
-      .groupBy("pid")
-      .agg(max_by(struct(col("tvs"), col("tes")), size(col("tes"))).as("t"))
-      .select(col("pid"), col("t.tvs").as("tvs"), col("t.tes").as("tes"))
-    base.join(best, Seq("pid"))
+    val reach = grow(Map.empty, 0)
+    // step i of an n-edge tail takes the first successor that still
+    // reaches the remaining n - i edges
+    val tail = udf { (coll: String, key: String) =>
+      val n = reach.getOrElse((coll, key), 0)
+      val walk = (1 to n).scanLeft((coll, key)) { (cur, i) =>
+        succ(cur).find(reach.getOrElse(_, 0) >= n - i).get }
+      Tail(walk.tail.map { case (c, k) => TailVertex(c, k) },
+        walk.zip(walk.tail).map { case ((fc, fk), (tc, tk)) =>
+          TailEdge(fc, fk, tc, tk, label) })
+    }.withName("hierarchy_tail")
+    val last = element_at(col("vertices"), -1)
+    basePaths
+      .withColumn("tail", tail(last.getField("collection"), last.getField("key")))
       .select(
-        concat(col("vertices"), col("tvs")).as("vertices"),
-        concat(col("edges"), col("tes")).as("edges"))
-  }
-
-  /** Thin-frontier hierarchy walk — result ≡ [[hierarchyLoopDense]]
-    * (same longest-per-start, same ≤`maxDepth` cap, arbitrary winner
-    * among equal-length forks), restructured so the heavy string-struct
-    * tail arrays never move during the iteration:
-    *
-    *  - each level checkpoints a THIN log row (bid, pid, edge fields) —
-    *    `bid` is the per-level branch id (fork-safe: a node with two
-    *    label successors forks into two branches);
-    *  - the frontier carries (bid, pid, cur, bid_path) where bid_path
-    *    is a LONG ARRAY of the branch ids taken so far — 8 B per level
-    *    versus the dense loop's ~200 B of tail structs per level, and
-    *    it exists only in the frontier, never in the logs;
-    *  - the winner per pid is the max-level frontier snapshot (max_by —
-    *    arbitrary among equal-length forks, the dense convention);
-    *  - winner tails reconstruct in ONE posexplode of bid_path joined
-    *    against the level-tagged log union — constant plan depth (the
-    *    first thin cut walked parents backward through depth chained
-    *    lazy joins, and the O(depth²) plan OOM'd the q233 depth-64
-    *    gate at analysis time);
-    *  - tails become arrays in ONE sort_array(collect_list) pass and
-    *    join back to the checkpointed base.
-    *
-    * Scale shape: per-level checkpoint and shuffle bytes drop from
-    * O(paths × tail structs) to O(extensions × ~100 B) + the long-array
-    * frontier; the winner pick shuffles thin rows instead of every
-    * level's arrays. Measured at the sf10 rehearsal (2.9 M paths, 4
-    * levels, local[32]): the q82 walk fell from 64 s (dense) to ~9 s.
-    * The per-level job count is unchanged (one observed checkpoint per
-    * level — the q233 single-job discipline).
-    *
-    * Depth lever CLOSED as not-needed (round 10): on a FUNCTIONAL label
-    * slice the walk is still one job per level (the depth-64 gate pays
-    * 64 scheduling rounds, ~0.1 s each); pointer doubling would reach a
-    * depth-d cap in ⌈log₂ d⌉ rounds, at the cost of a jump-table
-    * reconstruction for the emitted tails. Measured chain depths of the
-    * reference's committed ontology fixtures (`Scratch obodepth`,
-    * PLANS.md round 10): macrophage.owl (the CL extract) maxDepth 9,
-    * ro.owl maxDepth 7 — and the production walks cap at 64. At d ≤ 64
-    * the doubling saves at most ~5 s of scheduling on a degenerate
-    * chain while complicating every emitted tail; revisit only if a
-    * workload's hierarchies push d well past the cap. */
-  private[graft] def hierarchyLoopThin(basePaths: DataFrame, hier: DataFrame,
-                                       maxDepth: Int): DataFrame = {
-    val base = basePaths
-      .withColumn("pid", monotonically_increasing_id())
-      .withColumn("cur_coll", element_at(col("vertices"), -1).getField("collection"))
-      .withColumn("cur_key", element_at(col("vertices"), -1).getField("key"))
-      .localCheckpoint(true)
-
-    // fork detection, ONCE up front: when no node has two label
-    // successors (SUB_CLASS_OF/PART_OF slices are near-trees — the
-    // common case), every pid has exactly one branch, so the winner
-    // machinery (bid paths, max_by, posexplode+join) is unnecessary:
-    // a pid's tail IS its log rows. One map-side-combined aggregate
-    // over the label slice.
-    val functional = hier
-      .groupBy(col("from_coll"), col("from_key"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(max(col("__n")), lit(0L)).as("m"))
-      .head().getLong(0) <= 1L
-
-    // level-0 frontier: empty bid path (omitted on the fork-free path)
-    var frontier = base.select(col("pid"),
-      array().cast("array<long>").as("bid_path"),
-      col("cur_coll"), col("cur_key"))
-    var logs = List.empty[DataFrame]      // thin (pid, bid, v, e) per level
-    var snaps = List.empty[DataFrame]     // frontier snapshots per level
-    var depth = 0
-    var done = false
-    while (!done && depth < maxDepth) {
-      val obs = org.apache.spark.sql.Observation()
-      // one observed checkpoint per level (the q233 single-job rule);
-      // the checkpoint also pins this level's monotonically_increasing
-      // branch ids so logs and snapshots agree
-      val step = frontier.join(hier,
-          frontier("cur_coll") === hier("from_coll") &&
-          frontier("cur_key") === hier("from_key"))
-        .select(monotonically_increasing_id().as("bid"), col("pid"),
-          col("bid_path"),
-          col("from_coll"), col("from_key"), col("to_coll"), col("to_key"),
-          col("label"))
-        // referencing the bid COLUMN (not a second monotonically_
-        // increasing_id() call, which would generate different ids)
-        .withColumn("bid_path",
-          if (functional) col("bid_path") // unused: skip the array append
-          else concat(col("bid_path"), array(col("bid"))))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      if (obs.get("rows").asInstanceOf[Long] == 0L) done = true
-      else {
-        logs ::= step.select(col("pid"), col("bid"),
-          struct(col("to_coll").as("collection"), col("to_key").as("key"))
-            .as("v"),
-          struct(col("from_coll"), col("from_key"), col("to_coll"),
-            col("to_key"), col("label")).as("e"))
-        snaps ::= step.select(col("pid"), col("bid_path"))
-        frontier = step.select(col("pid"), col("bid_path"),
-          col("to_coll").as("cur_coll"), col("to_key").as("cur_key"))
-        depth += 1
-      }
-    }
-    if (logs.isEmpty)
-      return base.select(col("vertices"), col("edges"))
-    val byLevel = logs.reverse.zipWithIndex.map { case (l, i) => (i + 1, l) }
-    val logAll = byLevel.map { case (lvl, l) =>
-        l.select(col("pid"), lit(lvl).as("level"), col("bid"), col("v"),
-          col("e")) }
-      .reduce(_.unionByName(_))
-    val winnerRows =
-      if (functional) logAll // one branch per pid: every log row is tail
-      else {
-        // winner per pid: longest bid path (arbitrary among ties —
-        // max_by), then ONE posexplode + ONE join reconstructs it from
-        // the level-tagged log union — constant plan depth
-        val winners = snaps.reverse.zipWithIndex.map { case (s, i) =>
-            s.select(col("pid"), lit(i + 1).as("level"), col("bid_path")) }
-          .reduce(_.unionByName(_))
-          .groupBy("pid")
-          .agg(max_by(col("bid_path"), col("level")).as("bid_path"))
-        winners
-          .select(col("pid"),
-            posexplode(col("bid_path")).as(Seq("pos", "bid")))
-          .withColumn("level", col("pos") + 1)
-          .join(logAll.drop("pid"), Seq("level", "bid"))
-      }
-    val tails = winnerRows
-      .groupBy("pid")
-      .agg(sort_array(collect_list(struct(col("level"), col("v"),
-        col("e")))).as("t"))
-      .select(col("pid"),
-        transform(col("t"), x => x.getField("v")).as("tvs"),
-        transform(col("t"), x => x.getField("e")).as("tes"))
-    base.join(tails, Seq("pid"), "left")
-      .select(
-        concat(col("vertices"), coalesce(col("tvs"),
-          array().cast("array<struct<collection:string,key:string>>")))
-          .as("vertices"),
-        concat(col("edges"), coalesce(col("tes"),
-          array().cast("array<struct<from_coll:string,from_key:string," +
-            "to_coll:string,to_key:string,label:string>>")))
-          .as("edges"))
+        concat(col("vertices"), col("tail.tvs")).as("vertices"),
+        concat(col("edges"), col("tail.tes")).as("edges"))
   }
 
   /**

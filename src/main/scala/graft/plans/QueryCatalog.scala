@@ -6,8 +6,9 @@ import graft.operators.PathQueries
 
 /**
  * The reference's external query surface as data (SURVEY.md §2.7): a
- * `PathQuery` spec compiled onto the iterative join executor, and the 24
- * production instantiations (PhenotypeGraphBuilder.java:50-92) plus the
+ * `PathQuery` spec compiled onto the iterative join executor, and the 25
+ * production instantiations (the reference's 24,
+ * PhenotypeGraphBuilder.java:50-92, plus the 1-hop BGS query) and the
  * phenotype-subgraph materialization (:117-157).
  *
  * Every production query anchors at the cell-set collection CS and walks
@@ -36,11 +37,9 @@ object QueryCatalog {
     /** Scale path: run over the bucketed hop tables written by
       * `GraphStore.writeHopTables(edges, buckets, prefix)` — the edge
       * table never shuffles (see kHopBucketed). Result-identical to
-      * [[run]] on the same graph. The hierarchy walk joins each BFS
-      * level directly against the by_src table (orient = 'f' + label
-      * pushed to the bucketed scan), so the label slice never
-      * re-shuffles per level regardless of its size
-      * (PathQueries.withHierarchyBucketed). */
+      * [[run]] on the same graph. The hierarchy walk reads its label
+      * slice from the by_src table (orient = 'f' + label pushed to the
+      * bucketed scan; PathQueries.withHierarchyBucketed). */
     def runBucketed(spark: org.apache.spark.sql.SparkSession, prefix: String,
                     maxDepth: Int = 64): DataFrame = {
       val base = PathQueries.kHopBucketed(spark, prefix, anchor, hops)
@@ -52,7 +51,8 @@ object QueryCatalog {
     }
   }
 
-  /** The 24 production queries, in the reference's execution order. */
+  /** The 25 production queries: the reference's 24 in its execution
+    * order, led by the 1-hop BGS query. */
   val production: Seq[PathQuery] = Seq(
     PathQuery("CS", Seq("BGS")),
     PathQuery("CS", Seq("BMC", "BGS")),

@@ -81,8 +81,16 @@ class PathQueriesSpec extends SparkSpec {
     assert(p.length == 1 && p(0) == Seq("1", "a"))
   }
 
-  test("thin hierarchy loop ≡ dense loop on forks, dead ends, branches " +
-      "of distinct depth, and the depth cap") {
+  private def keysOf(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.select(transform($"vertices", x => x.getField("key")))
+      .as[Seq[String]].collect().toSet
+
+  private def edgesOf(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.select(transform($"edges", x => concat_ws("|",
+      x.getField("from_key"), x.getField("to_key"), x.getField("label"))))
+      .as[Seq[String]].collect().toSet
+
+  test("hierarchy walk: unique longest fork, dead end, depth cap") {
     // one fixture exercising every walk shape at once:
     //  start a: forks a->b (depth 3 via b->c->d) vs a->x (depth 1) —
     //           unique longest wins;  decoy label from a must prune
@@ -103,45 +111,52 @@ class PathQueriesSpec extends SparkSpec {
       e.select("to_coll", "to_key").as[(String, String)].collect().toSeq
         .distinct: _*)
     val base = PathQueries.kHop(v, e, "CS", Seq("CL"))
-    def keysOf(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
-      df.select(transform($"vertices", x => x.getField("key")))
-        .as[Seq[String]].collect().toSet
-    val dense = PathQueries.hierarchyLoopDense(base,
-      e.filter($"label" === "SUB_CLASS_OF"), maxDepth = 4)
-    val thin = PathQueries.hierarchyLoopThin(base,
-      e.filter($"label" === "SUB_CLASS_OF"), maxDepth = 4)
-    val expect = Set(
+    val got = PathQueries.withHierarchy(base, e, "SUB_CLASS_OF", maxDepth = 4)
+    assert(keysOf(got) == Set(
       Seq("1", "a", "b", "c", "d"), // unique longest fork
       Seq("2", "m"),                // dead end: empty tail survives
-      Seq("3", "p0", "p1", "p2", "p3", "p4")) // capped at 4 levels
-    assert(keysOf(dense) == expect)
-    assert(keysOf(thin) == expect)
-    // edge arrays must agree too, not just the vertex spines
-    def edgesOf(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
-      df.select(transform($"edges", x => concat_ws("|",
-        x.getField("from_key"), x.getField("to_key"), x.getField("label"))))
-        .as[Seq[String]].collect().toSet
-    assert(edgesOf(thin) == edgesOf(dense))
+      Seq("3", "p0", "p1", "p2", "p3", "p4"))) // capped at 4 levels
+    // edge arrays must follow the vertex spines, not just their length
+    val sub = (a: String, b: String) => s"$a|$b|SUB_CLASS_OF"
+    assert(edgesOf(got) == Set(
+      Seq("1|a|rel", sub("a", "b"), sub("b", "c"), sub("c", "d")),
+      Seq("2|m|rel"),
+      Seq("3|p0|rel") ++ (0 until 4).map(i => sub(s"p$i", s"p${i + 1}"))))
+    // both arrays read one tail per row: the optimizer must not inline
+    // the row function into each of them
+    val plan = got.queryExecution.optimizedPlan.toString
+    assert("hierarchy_tail\\(".r.findAllIn(plan).size == 1, plan)
   }
 
-  test("thin hierarchy loop picks exactly one branch among equal-length " +
-      "forks (the dense max_by convention)") {
+  test("hierarchy walk follows cycles up to maxDepth") {
+    // the walk repeats vertices and edges: a->b->a keeps extending until
+    // the depth cap, exactly as a per-level frontier join would
+    val v = verts(("CS", "1"), ("CL", "a"), ("CL", "b"))
+    val e = edges(
+      ("CS", "1", "CL", "a", "rel"),
+      ("CL", "a", "CL", "b", "SUB_CLASS_OF"),
+      ("CL", "b", "CL", "a", "SUB_CLASS_OF"))
+    val got = PathQueries.withHierarchy(
+      PathQueries.kHop(v, e, "CS", Seq("CL")), e, "SUB_CLASS_OF", maxDepth = 5)
+    assert(keysOf(got) == Set(Seq("1", "a", "b", "a", "b", "a", "b")))
+    assert(got.select(size($"edges")).as[Int].collect().toSeq == Seq(1 + 5))
+  }
+
+  test("hierarchy tie-break: smallest (to_coll, to_key) per step") {
     val v = verts(("CS", "1"), ("CL", "a"), ("CL", "l1"), ("CL", "l2"),
       ("CL", "r1"), ("CL", "r2"))
     val e = edges(
       ("CS", "1", "CL", "a", "rel"),
-      ("CL", "a", "CL", "l1", "SUB_CLASS_OF"),
-      ("CL", "l1", "CL", "l2", "SUB_CLASS_OF"),
       ("CL", "a", "CL", "r1", "SUB_CLASS_OF"),
-      ("CL", "r1", "CL", "r2", "SUB_CLASS_OF"))
+      ("CL", "r1", "CL", "r2", "SUB_CLASS_OF"),
+      ("CL", "a", "CL", "l1", "SUB_CLASS_OF"),
+      ("CL", "l1", "CL", "l2", "SUB_CLASS_OF"))
     val base = PathQueries.kHop(v, e, "CS", Seq("CL"))
-    val got = PathQueries.hierarchyLoopThin(base,
-        e.filter($"label" === "SUB_CLASS_OF"), maxDepth = 8)
+    val got = PathQueries.withHierarchy(base, e, "SUB_CLASS_OF", maxDepth = 8)
       .select(transform($"vertices", x => x.getField("key")))
       .as[Seq[String]].collect()
-    assert(got.length == 1) // ONE winner, not both forks
-    assert(got(0) == Seq("1", "a", "l1", "l2") ||
-      got(0) == Seq("1", "a", "r1", "r2"))
+    // ONE winner among the equal-length forks: l1 < r1
+    assert(got.toSeq == Seq(Seq("1", "a", "l1", "l2")))
   }
 
   test("subgraph dedups exploded vertices and edges") {

@@ -51,6 +51,15 @@ class QueryCatalogSpec extends SparkSpec {
     assert(path == Seq("cs1", "c1", "g1", "d1", "d2", "d3")) // longest tail
   }
 
+  test("PathQuery.run with a hierarchy tail releases its RDDs") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val q = PathQuery("CS", Seq("CL", "GS", "MONDO"),
+      Some(("MONDO-MONDO", "SUB_CLASS_OF")))
+    assert(q.run(verts, edges).collect().length == 1)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("bucketed hop tables run the catalog shuffle-free and match kHop") {
     import graft.operators.PathQueries
     GraphStore.writeHopTables(edges, buckets = 4, prefix = "hopt")
@@ -77,29 +86,6 @@ class QueryCatalogSpec extends SparkSpec {
       val q = PathQuery("CS", Seq("CL", "GS", "MONDO"),
         Some(("MONDO-MONDO", "SUB_CLASS_OF")))
       assert(sig(q.runBucketed(spark, "hopt")) == sig(q.run(verts, edges)))
-      // ...and a single BFS level joins the frontier against the bucketed
-      // slice WITHOUT an edge-side shuffle: the only Exchange in the step
-      // plan is the frontier's (the label slice keeps its bucketed
-      // (src_coll, src_key) partitioning through the rename projection)
-      val slice = spark.table("hopt_by_src")
-        .filter($"orient" === "f" && $"label" === "SUB_CLASS_OF")
-        .select($"src_coll".as("from_coll"), $"src_key".as("from_key"),
-          $"dst_coll".as("to_coll"), $"dst_key".as("to_key"), $"label")
-      val frontier = Seq(("p0", "MONDO", "d1")).toDF("pid", "cur_coll", "cur_key")
-        .withColumn("tvs",
-          array().cast("array<struct<collection:string,key:string>>"))
-        .withColumn("tes", array().cast(
-          "array<struct<from_coll:string,from_key:string,to_coll:string,to_key:string,label:string>>"))
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val stepPlan = PathQueries.hierarchyStep(frontier, slice)
-          .queryExecution.executedPlan.toString
-        val nStepEx = stepPlan.linesIterator
-          .count(_.contains("Exchange hashpartitioning"))
-        assert(nStepEx <= 1,
-          s"hierarchy step must not shuffle the edge side:\n$stepPlan")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       // repeating collection pattern (CS-CL, CL-CS): uniqueEdges tracking
       // engages in the bucketed variant too — cs1-c1 must not be walked
       // back, so the only 2-hop is cs1 -> c1 -> cs2
