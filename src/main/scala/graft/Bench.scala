@@ -69,18 +69,6 @@ object Bench {
     val sent = s"""{"query":"$sentinelName","start":$sentStart,""" +
       s""""mid":$sentMid,"end":$sentEnd}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sentinel":$sent,"sf":"$sfDir"}"""
-    // The one-line JSON contract, emitted BOTH ways (r14 verdict item 2):
-    // stdout for the driver's tail, and a file artifact — the driver's
-    // stdout capture truncated the ~10 KB line in every BENCH_r01–r14
-    // (`parsed: null`), so the file is the readable copy. Same line, same
-    // run, written before the final println so a crashed print still
-    // leaves the artifact.
-    try {
-      val out = java.nio.file.Paths.get("bench", "last_run.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // never fail the bench on I/O
     println(line)
     spark.stop()
   }

@@ -29,7 +29,7 @@ object Queries {
   /** Session-scoped catalog of the driver's IMMUTABLE input tables: the
     * resolved relation (file listing + footer schema inference + analysis)
     * is built once per (session, dir, table) and reused — measured 85 ms
-    * per repeated `spark.read.parquet` call at sf0.1 (Scratch `readcost`),
+    * per repeated `spark.read.parquet` call at sf0.1,
     * paid 2–5× per gate per bench run before this memo. This caches the
     * PLAN only, never data or results: every action still scans the
     * parquet files (releaseAll()'s clearCache/unpersist leave resolved
@@ -932,17 +932,6 @@ object Queries {
     })
     (pqImmutable(s, s"$base/v"), pqImmutable(s, s"$base/e"))
   }
-
-  /** Scratch-only accessor: the raw catalog edge union (no checkpoint)
-    * for stage-attribution profiling of the bucketed gates. */
-  private[graft] def catalogEdgesForScratch(s: SparkSession, dir: String): DataFrame =
-    catalogGraphRaw(s, dir)._2
-
-  /** Scratch-only accessor: the checkpointed fixture graph for q114
-    * stage-attribution profiling. */
-  private[graft] def catalogGraphForScratch(s: SparkSession,
-                                            dir: String): (DataFrame, DataFrame) =
-    catalogGraph(s, dir)
 
   private[graft] def catalogGraphRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val cust = t(s, dir, "customer").select(col("c_custkey").cast("long").as("c"))
@@ -4914,7 +4903,7 @@ object Queries {
     * compaction/tombstone gates copy a pristine index (50 batch dirs ×
     * ~16 one-file cell dirs ≈ 800 small files) into a run root EVERY
     * run, and Hadoop's FileUtil.copy walks that tree single-threaded
-    * (~1.1 s measured at sf0.1 — Scratch q309prof `fixturecopy`). The
+    * (~1.1 s measured at sf0.1). The
     * files are independent, so the leaves fan out over a bounded pool;
     * byte-identical layout, same one-level-down semantics as the
     * FileUtil.copy(dir → existing dir is created fresh) call it replaces. */

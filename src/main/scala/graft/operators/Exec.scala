@@ -48,7 +48,7 @@ private[graft] object Exec {
     * conf — exactly the pre-r14 behavior; only a provably small frame
     * shrinks its loop. Measured motivation: the per-round cost of the
     * graph loops at gate scale is ~empty-task scheduling — same-JVM
-    * interleaved A/B (Scratch `iterparts`, sf0.1) read kShell 7.78 s @
+    * interleaved A/B at sf0.1 read kShell 7.78 s @
     * 32 partitions vs 5.07 s @ 2, scc 7.87 vs 4.30 — while at 100 TB
     * the estimate exceeds conf·bytesPerPart and the clamp keeps today's
     * parallelism. */
@@ -75,7 +75,7 @@ private[graft] object Exec {
     * size-derived count co-partitions every per-round frame with the
     * static side — zero mismatch — and sizes the per-round shuffles to
     * the data instead of the deployment (measured: kShell 7.78→5.07 s,
-    * scc 7.87→4.30 s at the sf0.1 gate fixtures, Scratch `iterparts`).
+    * scc 7.87→4.30 s at the sf0.1 gate fixtures).
     * At 100 TB the size estimate clamps to the session conf and this is
     * a no-op. Only safe around loops whose aggregates are
     * partitioning-independent (integer/min/max exact or

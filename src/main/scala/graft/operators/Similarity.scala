@@ -1337,7 +1337,7 @@ object Similarity {
     * measured-good literal) keeps small-quantizer probe plans on the
     * zero-job literal path; both paths return bit-identical rows
     * (spec-pinned) — the switch is a plan-shape decision only.
-    * Measured (Scratch `subjoinscale`, 200k-row assignment, local[8]):
+    * Measured (200k-row assignment, local[8]):
     * the join path's per-cosine cost is FLAT in nCells (~0.08 µs —
     * 6.7/11.7/21.5/39.7 µs/row at 1k/4k/16k/64k cells, tracking the
     * k1+k2 cosine count exactly) while the literal's grows with the

@@ -2284,7 +2284,7 @@ object Stats {
     isotonicFitImpl(df, idxCol, valueCol, persistTagged = false)
 
   /** [[isotonicFit]] with the tagged-row materialization strategy
-    * exposed for measurement (Scratch `isopersist`): the tagged table
+    * exposed for measurement: the tagged table
     * (corpus-sized, phase-1 output) feeds TWO consumers — the block
     * aggregate and the final join. `persistTagged = true` persists it
     * (MEMORY_AND_DISK — the r11 watch-item: fits storage at one scale,

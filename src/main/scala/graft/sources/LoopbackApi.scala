@@ -33,7 +33,7 @@ final class LoopbackApi(handler: String => Option[String])
     // initializer, so this setProperty only works if no httpserver
     // class loaded earlier in the JVM. The load-order-independent fix
     // is -Dsun.net.httpserver.nodelay=true on the command line —
-    // build.sbt javaOptions and tools/java_env.sh both set it; this
+    // build.sbt javaOptions sets it; this
     // call remains as best-effort for ad-hoc embedders.
     System.setProperty("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)

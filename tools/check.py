@@ -80,6 +80,6 @@ if slow:
     print(f"\nSLOW ORACLES (>{10}s): " +
           ", ".join(f"{n}={d:.1f}s" for n, d in slow))
 print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak, {len(slow)} slow")
-# nonzero exit on any fail or slow oracle so callers (roundcheck.sh,
-# set -e pipelines) cannot read a red run as green
+# nonzero exit on any fail or slow oracle so callers (set -e
+# pipelines) cannot read a red run as green
 sys.exit(1 if (n_fail or slow) else 0)
