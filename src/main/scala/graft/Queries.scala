@@ -463,7 +463,7 @@ object Queries {
 
   /** N1/N3: char-ngram inverted index over part names, searched with a
     * fixed token set. Substring semantics make the SQL oracle a LIKE
-    * count — the Spark side goes through the real index build + join. */
+    * count — the Spark side goes through the real index build + search. */
   def q29NgramSearch(s: SparkSession, dir: String): DataFrame = {
     val idx = graft.operators.SearchIndex.postings(
       t(s, dir, "part"), Seq("p_partkey"),

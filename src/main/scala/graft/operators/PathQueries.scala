@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
  *    (`IS_SAME_COLLECTION(@nodeI, p.vertices[i])`, lines 36-37);
  *  - no edge repeats within one path (AQL default `uniqueEdges: "path"`);
  *  - the optional hierarchy extension walks OUTBOUND over a single edge
- *    label up to depth 64 from the path's last vertex and keeps only the
- *    LONGEST chain per start (`SORT LENGTH(p1.edges) DESC LIMIT 1`,
- *    lines 88-119).
+ *    label of one edge collection up to depth 64 from the path's last
+ *    vertex and keeps only the LONGEST chain per start
+ *    (`SORT LENGTH(p1.edges) DESC LIMIT 1`, lines 88-119).
  *
  * Spark-first design:
  *  - ANY direction = union of the edge table with its reverse — built once;
@@ -26,8 +26,10 @@ import org.apache.spark.sql.functions._
  *  - `uniqueEdges: path` = an accumulated set of undirected edge ids checked
  *    with array_contains (k ≤ 5, so the array is tiny);
  *  - the hierarchy tail is one row function of the path's last vertex
- *    over the single-label slice, collected once per call and held on the
- *    driver (depth cap 64, AqlQuerySetBuilder.java:96): the longest walk
+ *    over the single-label slice (one partition directory of the stored
+ *    edge table once `PathQuery.run` restricts it to the edge
+ *    collection), collected once per call and held on the driver (depth
+ *    cap 64, AqlQuerySetBuilder.java:96): the longest walk
  *    per start, ties broken by the smallest `(to_coll, to_key)` at each
  *    step — no per-level Spark job.
  *
@@ -219,6 +221,13 @@ object PathQueries {
    * successor with the smallest `(to_coll, to_key)` (String order) —
    * AQL's `LIMIT 1` keeps an arbitrary one, this engine a fixed one.
    *
+   * The walk follows every `label` edge of `edges`, whatever collections
+   * it joins. The reference walks one edge collection (e.g. "MONDO-MONDO");
+   * `QueryCatalog.PathQuery.run` gets that walk by passing only the
+   * `(from_coll, to_coll)` slice of the edge table, so a label that also
+   * crosses collections (a MONDO term SUB_CLASS_OF an HP term) stays out
+   * of the tail. Called on the unfiltered table, the walk is label-only.
+   *
    * Runs one action: the label slice is collected to the driver when the
    * call is made; the returned frame stays lazy.
    */
@@ -228,15 +237,19 @@ object PathQueries {
       .select(col("from_coll"), col("from_key"), col("to_coll"), col("to_key")),
       label, maxDepth)
 
-  /** [[withHierarchy]] with its label slice read from the bucketed
-    * `<prefix>_by_src` hop table (GraphStore.writeHopTables layout): the
-    * directed rows (`orient = 'f'`) of the label, pushed to the scan.
-    * Result ≡ [[withHierarchy]] on the same graph (spec-pinned). */
+  /** [[withHierarchy]] over the edge collection `fromColl-toColl`, with
+    * its slice read from the bucketed `<prefix>_by_src` hop table
+    * (GraphStore.writeHopTables layout): the directed rows
+    * (`orient = 'f'`) of the collection pair and the label, pushed to the
+    * scan. Result ≡ [[withHierarchy]] on the same collection pair's edges
+    * (spec-pinned through `PathQuery.runBucketed` ≡ `run`). */
   def withHierarchyBucketed(spark: SparkSession, prefix: String,
-                            basePaths: DataFrame, label: String,
+                            basePaths: DataFrame, fromColl: String,
+                            toColl: String, label: String,
                             maxDepth: Int = 64): DataFrame =
     hierarchyWalk(basePaths, spark.table(s"${prefix}_by_src")
-      .filter(col("orient") === "f" && col("label") === label)
+      .filter(col("orient") === "f" && col("src_coll") === fromColl &&
+        col("dst_coll") === toColl && col("label") === label)
       .select(col("src_coll"), col("src_key"), col("dst_coll"), col("dst_key")),
       label, maxDepth)
 

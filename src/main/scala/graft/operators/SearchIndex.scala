@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
  * N1-N3), replacing the reference's ArangoSearch analyzers/views
  * (ArangoDbUtilities.py:209-358) with a materialized inverted-index
  * DataFrame — the Spark-native shape: build is one explode+distinct
- * (narrow then single shuffle for dedup), search is an equi-join on the
- * token, and the postings table partitions/bucketizes by token at scale.
+ * (narrow then single shuffle for dedup), search is a filter on the
+ * literal tokens, and the postings table bucketizes by token so that
+ * filter prunes the scan to the queried tokens' buckets.
  *
  * Analyzers:
  *  - N1 char n-gram (min 3, max 4, preserveOriginal=true) — substring
@@ -88,20 +89,22 @@ object SearchIndex {
     perField.reduce(_.unionByName(_)).distinct()
   }
 
-  /** Token-match search: distinct ids per query token, with hit counts.
-    * The query side is tiny — broadcast; the postings side is pre-built
-    * and (at scale) bucketed by token so this is a local join. */
-  def search(index: DataFrame, queries: Seq[String]): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    index.join(broadcast(queries.toDF("q")), col("token") === col("q"))
-  }
+  /** Token-match search: the postings rows of the query tokens, each
+    * tagged with its token as `q` (the index's columns, then `q`). The
+    * tokens are literals in the scan's filter, so over a view
+    * ([[createView]]) the scan reads only the buckets they hash to; no
+    * join, one job. A token repeated in `queries` matches once. */
+  def search(index: DataFrame, queries: Seq[String]): DataFrame =
+    index.filter(col("token").isin(queries.distinct: _*))
+      .withColumn("q", col("token"))
 
   /** View lifecycle (ArangoDbUtilities.py:209-358 create_analyzers /
     * delete_analyzers / create_view — the delete-then-recreate management
     * the reference runs on every load): the "view" is a persisted
-    * postings table bucketed+sorted by token, so repeated searches and
-    * index-index joins co-locate without shuffling the postings.
+    * postings table bucketed+sorted by token, so a [[search]] reads only
+    * the files of the buckets its tokens hash to (bucket pruning; the
+    * planner may still turn the bucketed scan itself off, which keeps
+    * the pruning).
     * `collections` mirrors create_view's per-database link whitelist
     * (ArangoDbUtilities.py:332-352): when set and the source has a
     * `collection` column, only whitelisted collections are indexed. */

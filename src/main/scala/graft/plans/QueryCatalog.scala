@@ -13,23 +13,36 @@ import graft.operators.PathQueries
  *
  * Every production query anchors at the cell-set collection CS and walks
  * ANY-direction hops; hierarchy tails walk OUTBOUND over one edge label
- * with the longest chain kept per start (AqlQuerySetBuilder.java:28-351).
+ * of one edge collection with the longest chain kept per start
+ * (AqlQuerySetBuilder.java:28-351).
  */
 object QueryCatalog {
 
   /** @param hops       required vertex collection at positions 1..k
-    * @param hierarchy  optional (edgeCollectionLabelFilter, edgeLabel):
-    *                   the reference names an edge collection (e.g.
-    *                   "GO-GO") and a label; in the Spark engine the
-    *                   collection constraint is implied by the label
-    *                   filter over the partitioned edge table */
+    * @param hierarchy  optional (edge collection, edge label), e.g.
+    *                   ("GO-GO", "SUB_CLASS_OF"): the tail walks only the
+    *                   edges of that label from the collection before the
+    *                   '-' to the one after it, the reference's walk over
+    *                   one edge collection (AqlQuerySetBuilder.java:88-119).
+    *                   Over the stored edge table that slice is one
+    *                   `(from_coll, to_coll)` partition directory. A name
+    *                   that is not `A-B` fails at construction. */
   final case class PathQuery(anchor: String, hops: Seq[String],
                              hierarchy: Option[(String, String)] = None) {
+    // (from collection, to collection, label) of the hierarchy tail
+    private val tail: Option[(String, String, String)] =
+      hierarchy.map { case (coll, label) =>
+        val (from, to) = PathQuery.edgeCollection(coll)
+        (from, to, label)
+      }
+
     def run(vertices: DataFrame, edges: DataFrame, maxDepth: Int = 64): DataFrame = {
       val base = PathQueries.kHop(vertices, edges, anchor, hops)
-      hierarchy match {
-        case Some((_, label)) =>
-          PathQueries.withHierarchy(base, edges, label, maxDepth)
+      tail match {
+        case Some((from, to, label)) =>
+          PathQueries.withHierarchy(base,
+            edges.filter(col("from_coll") === from && col("to_coll") === to),
+            label, maxDepth)
         case None => base
       }
     }
@@ -37,17 +50,28 @@ object QueryCatalog {
     /** Scale path: run over the bucketed hop tables written by
       * `GraphStore.writeHopTables(edges, buckets, prefix)` — the edge
       * table never shuffles (see kHopBucketed). Result-identical to
-      * [[run]] on the same graph. The hierarchy walk reads its label
-      * slice from the by_src table (orient = 'f' + label pushed to the
-      * bucketed scan; PathQueries.withHierarchyBucketed). */
+      * [[run]] on the same graph. The hierarchy walk reads its slice
+      * from the by_src table (orient = 'f', the edge collection and the
+      * label pushed to the bucketed scan;
+      * PathQueries.withHierarchyBucketed). */
     def runBucketed(spark: org.apache.spark.sql.SparkSession, prefix: String,
                     maxDepth: Int = 64): DataFrame = {
       val base = PathQueries.kHopBucketed(spark, prefix, anchor, hops)
-      hierarchy match {
-        case Some((_, label)) =>
-          PathQueries.withHierarchyBucketed(spark, prefix, base, label, maxDepth)
+      tail match {
+        case Some((from, to, label)) =>
+          PathQueries.withHierarchyBucketed(spark, prefix, base, from, to, label, maxDepth)
         case None => base
       }
+    }
+  }
+
+  object PathQuery {
+    /** Split an edge collection name `A-B` into its (from, to) vertex
+      * collections. */
+    private def edgeCollection(name: String): (String, String) = name.split("-", -1) match {
+      case Array(from, to) if from.nonEmpty && to.nonEmpty => (from, to)
+      case _ => throw new IllegalArgumentException(
+        s"edge collection '$name' is not of the form FROM-TO")
     }
   }
 

@@ -51,6 +51,33 @@ class QueryCatalogSpec extends SparkSpec {
     assert(path == Seq("cs1", "c1", "g1", "d1", "d2", "d3")) // longest tail
   }
 
+  // the fixture plus a SUB_CLASS_OF edge out of the MONDO collection: a
+  // walk over the label alone could take it, a walk over "MONDO-MONDO"
+  // must not
+  private lazy val crossVerts = verts.unionByName(Seq(("HP", "h1")).toDF("collection", "key"))
+  private lazy val crossEdges = edges.unionByName(
+    Seq(("MONDO", "d2", "HP", "h1", "SUB_CLASS_OF"))
+      .toDF("from_coll", "from_key", "to_coll", "to_key", "label"))
+
+  private def keyPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(concat_ws("|", transform($"vertices", v => v.getField("key"))))
+      .as[String].collect().sorted.toSeq
+
+  test("hierarchy tails walk one edge collection, not every edge of the label") {
+    val q = PathQuery("CS", Seq("CL", "GS", "MONDO"),
+      Some(("MONDO-MONDO", "SUB_CLASS_OF")))
+    assert(keyPaths(q.run(crossVerts, crossEdges)) == Seq("cs1|c1|g1|d1|d2|d3"))
+    // the label-only walk on the whole table ties d3 with h1 at d2 and
+    // takes the smaller (to_coll, to_key): ("HP", "h1")
+    val base = graft.operators.PathQueries.kHop(crossVerts, crossEdges, "CS",
+      Seq("CL", "GS", "MONDO"))
+    assert(keyPaths(graft.operators.PathQueries.withHierarchy(base, crossEdges,
+      "SUB_CLASS_OF")) == Seq("cs1|c1|g1|d1|d2|h1"))
+    for (bad <- Seq("MONDO", "MONDO-MONDO-HP", "-MONDO", "MONDO-", ""))
+      intercept[IllegalArgumentException](
+        PathQuery("CS", Seq("CL"), Some((bad, "SUB_CLASS_OF"))))
+  }
+
   test("PathQuery.run with a hierarchy tail releases its RDDs") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -62,30 +89,29 @@ class QueryCatalogSpec extends SparkSpec {
 
   test("bucketed hop tables run the catalog shuffle-free and match kHop") {
     import graft.operators.PathQueries
-    GraphStore.writeHopTables(edges, buckets = 4, prefix = "hopt")
+    GraphStore.writeHopTables(crossEdges, buckets = 4, prefix = "hopt")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def sig(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.select(concat_ws("|", transform($"vertices", v => v.getField("key"))))
-          .as[String].collect().sorted.toSeq
       // 2-hop: both scans arrive bucketed on their join keys -> the whole
       // plan runs with ZERO shuffle exchanges
       val two = PathQueries.kHopBucketed(spark, "hopt", "CS", Seq("BMC", "BGS"))
-      assert(sig(two) == sig(PathQueries.kHop(verts, edges, "CS", Seq("BMC", "BGS"))))
+      assert(keyPaths(two) == keyPaths(PathQueries.kHop(crossVerts, crossEdges, "CS", Seq("BMC", "BGS"))))
       val plan2 = two.queryExecution.executedPlan.toString
       assert(!plan2.contains("Exchange hashpartitioning"),
         s"expected shuffle-free 2-hop:\n$plan2")
       // 3-hop: the growing path side re-shuffles once, the edge scans never
       val three = PathQueries.kHopBucketed(spark, "hopt", "CS", Seq("CL", "GS", "MONDO"))
-      assert(sig(three) == sig(PathQueries.kHop(verts, edges, "CS", Seq("CL", "GS", "MONDO"))))
+      assert(keyPaths(three) == keyPaths(PathQueries.kHop(crossVerts, crossEdges, "CS", Seq("CL", "GS", "MONDO"))))
       val plan3 = three.queryExecution.executedPlan.toString
       val nEx = plan3.linesIterator.count(_.contains("Exchange hashpartitioning"))
       assert(nEx <= 2, s"expected at most 2 path-side exchanges, got $nEx:\n$plan3")
-      // hierarchy variant over the bucketed by_src slice matches run()
+      // hierarchy variant over the bucketed by_src slice matches run(),
+      // and both ignore the MONDO -> HP decoy edge of the label
       val q = PathQuery("CS", Seq("CL", "GS", "MONDO"),
         Some(("MONDO-MONDO", "SUB_CLASS_OF")))
-      assert(sig(q.runBucketed(spark, "hopt")) == sig(q.run(verts, edges)))
+      assert(keyPaths(q.runBucketed(spark, "hopt")) == keyPaths(q.run(crossVerts, crossEdges)))
+      assert(keyPaths(q.runBucketed(spark, "hopt")) == Seq("cs1|c1|g1|d1|d2|d3"))
       // repeating collection pattern (CS-CL, CL-CS): uniqueEdges tracking
       // engages in the bucketed variant too — cs1-c1 must not be walked
       // back, so the only 2-hop is cs1 -> c1 -> cs2
@@ -98,9 +124,9 @@ class QueryCatalogSpec extends SparkSpec {
       GraphStore.writeHopTables(repEdges, buckets = 2, prefix = "hoprep")
       val rb = graft.operators.PathQueries
         .kHopBucketed(spark, "hoprep", "CS", Seq("CL", "CS"))
-      assert(sig(rb) == sig(graft.operators.PathQueries
+      assert(keyPaths(rb) == keyPaths(graft.operators.PathQueries
         .kHop(repVerts, repEdges, "CS", Seq("CL", "CS"))))
-      assert(sig(rb) == Seq("cs1|c1|cs2", "cs2|c1|cs1"))
+      assert(keyPaths(rb) == Seq("cs1|c1|cs2", "cs2|c1|cs1"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

@@ -48,10 +48,57 @@ class SearchIndexSpec extends SparkSpec {
     val hits = SearchIndex.search(view, Seq("nai", "macroph"))
       .select("key").as[String].collect().toSet
     assert(hits == Set("c1", "c2"))
-    // bucketing recorded in the catalog (co-located token joins at scale)
+    // bucketing recorded in the catalog (searches prune to token buckets)
     val ddl = spark.sql("DESCRIBE EXTENDED search_view").collect()
       .map(_.mkString(" ")).mkString("\n")
     assert(ddl.contains("token"), s"expected token bucketing in:\n$ddl")
+  }
+
+  test("search is a bucket-pruned token filter: same rows and columns as " +
+       "a broadcast join, repeated tokens match once, no join") {
+    SearchIndex.createView(verts, Seq("collection", "key"), fields,
+      "search_view_f", buckets = 4)
+    try {
+      val view = spark.table("search_view_f")
+      // oracle: the token equi-join against the query list
+      def joined(tokens: Seq[String]) =
+        view.join(broadcast(tokens.toDF("q")), $"token" === $"q")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val tokens = Seq("nai", "macroph", "interferon", "nomatch")
+      val got = SearchIndex.search(view, tokens)
+      assert(got.columns.toSeq == joined(tokens).columns.toSeq)
+      assert(got.columns.toSeq == view.columns.toSeq :+ "q")
+      assert(rows(got) == rows(joined(tokens)))
+      assert(rows(got).size == 4) // c1, c2, z1, g1
+      // a repeated token returns each hit once; the join returns it twice
+      assert(rows(SearchIndex.search(view, Seq("macroph", "macroph"))) ==
+        rows(joined(Seq("macroph"))))
+      assert(joined(Seq("macroph", "macroph")).count() == 4)
+      assert(SearchIndex.search(view, Nil).count() == 0)
+      // one scan with the token as a literal: no broadcast, no join, and
+      // the scan reads only the files of the token's bucket. The planner
+      // turns the bucketed scan off (nothing downstream needs the bucket
+      // layout); the bucket pruning stays. Parquet filter pushdown is off
+      // here so that row-group statistics cannot be what skips the rows.
+      spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+      val one = SearchIndex.search(view, Seq("macroph"))
+      assert(one.collect().length == 2)
+      val executed = one.queryExecution.executedPlan
+      val plan = executed.toString
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"), plan)
+      val scan = executed.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(fail(s"no file scan in:\n$plan"))
+      val selected = scan.optionalBucketSet.map(_.cardinality())
+      assert(selected.exists(_ < 4), s"selected buckets $selected in:\n$plan")
+      val rowsRead = scan.metrics("numOutputRows").value
+      assert(rowsRead >= 2 && rowsRead < view.count(),
+        s"scan read $rowsRead of ${view.count()} postings")
+    } finally {
+      spark.conf.unset("spark.sql.parquet.filterPushdown")
+      SearchIndex.dropView(spark, "search_view_f")
+    }
   }
 
   test("phrase search: consecutive tokens only, anchors counted, " +
