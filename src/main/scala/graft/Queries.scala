@@ -909,11 +909,9 @@ object Queries {
     * modularly from customer keys, with a SUB_CLASS_OF hierarchy and a
     * decoy edge label. [[catalogGraph]] returns (vertices, edges) eagerly
     * materialized — every catalog query reads the edge table once per hop
-    * and each union branch otherwise carries its own distinct shuffle;
-    * [[catalogGraphRaw]] skips the checkpoints for single-pass consumers
-    * (q53 writes the edges once and never touches the vertices). */
-  // The fixture graph is DETERMINISTIC per data dir and consumed by six
-  // gates (q46a–d, q53's sibling, q114) — derive it once per JVM per dir
+    * and each union branch otherwise carries its own distinct shuffle. */
+  // The fixture graph is DETERMINISTIC per data dir and consumed by four
+  // gates (q46a–d) — derive it once per JVM per dir
   // and land it in run-scoped parquet; each gate reads the materialized
   // tables instead of re-running the union-of-derivations (the same
   // durable-files-not-cached-blocks rationale as the q64 curation cache:
@@ -933,7 +931,7 @@ object Queries {
     (pqImmutable(s, s"$base/v"), pqImmutable(s, s"$base/e"))
   }
 
-  private[graft] def catalogGraphRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def catalogGraphRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val cust = t(s, dir, "customer").select(col("c_custkey").cast("long").as("c"))
     val clKeys = cust.select((col("c") % 200).as("j")).distinct()
     val gsEdges = clKeys.select(col("j"), explode(array_distinct(
@@ -1030,27 +1028,6 @@ object Queries {
       .select(lit("sge").as("q"), col("n").cast("string").as("val"))
     catalogSig(paths4, "p4")
       .unionByName(census).unionByName(enriched).unionByName(edgeCount)
-      .orderBy("q", "val")
-  }
-
-  /** The bucketed hop-table SCALE path as a driver gate: the same catalog
-    * 2-hop as q46a, but run via GraphStore.writeHopTables (undirected
-    * edge view persisted twice, bucketed+sorted by each hop join key) +
-    * PathQuery.runBucketed — the layout where the edge table never
-    * shuffles (zero exchanges on a 2-hop, plan-asserted in
-    * QueryCatalogSpec). Identical output contract: q46a's oracle. */
-  def q53BucketedCatalog(s: SparkSession, dir: String): DataFrame =
-    bucketedCatalogGate(s, dir, prodIdx = 2, prefix = "q53_hops", tag = "p1")
-
-  /** Shared body of the bucketed-catalog gates (q53, q82): vertices are
-    * never touched (raw graph, not catalogGraph); the edge union IS
-    * materialized once — writeHopTables reads it twice (by_src and
-    * by_dst), which would re-run the 11-branch union per write. */
-  private def bucketedCatalogGate(s: SparkSession, dir: String, prodIdx: Int,
-                                  prefix: String, tag: String): DataFrame = {
-    val edges = catalogGraphRaw(s, dir)._2.localCheckpoint(true)
-    graft.sources.GraphStore.writeHopTables(edges, buckets = 8, prefix)
-    catalogSig(QueryCatalog.production(prodIdx).runBucketed(s, prefix), tag)
       .orderBy("q", "val")
   }
 
@@ -1602,14 +1579,6 @@ object Queries {
     graft.operators.Events.sessionizeChunked(events(s, dir),
         gapSeconds = 1800L)
       .orderBy("user_id", "session_idx")
-
-  /** Scale-path twin of q46b under the SAME oracle: the catalog
-    * hierarchy shape executed over bucketed hop tables
-    * (PathQuery.runBucketed → kHopBucketed + withHierarchyBucketed,
-    * where neither the hop joins nor the per-level hierarchy joins ever
-    * shuffle the edge side). */
-  def q82BucketedHierarchy(s: SparkSession, dir: String): DataFrame =
-    bucketedCatalogGate(s, dir, prodIdx = 19, prefix = "q82_hops", tag = "p2")
 
   /** Grouped-KLL gate (q78's contract through the groupBy path):
     * approxPercentiles of l_quantity per returnflag — each group's
@@ -4544,7 +4513,7 @@ object Queries {
     * (39 remain → the longest-tail rule takes the natural end at 79),
     * with label-OTHER skip decoys the single-label prefilter must
     * drop. The oracle is the same walk as a 64-bounded recursive CTE
-    * + per-start argmax. The shallow-fixture gates (q31/q46b/q82)
+    * + per-start argmax. The shallow-fixture gates (q31/q46b)
     * never push past ~6 levels; this is the depth-64 rehearsal. */
   def q233DeepHierarchy(s: SparkSession, dir: String): DataFrame = {
     val nodes = t(s, dir, "orders")
@@ -4602,20 +4571,6 @@ object Queries {
       .distinct()
       .withColumn("label", col("node") % 12)
     GraphAlgos.modularity(edges, labels)
-  }
-
-  /** Catalog-surface gate for the global-analytics member: personalized
-    * PageRank seeded from the CS vertices over the phenotype subgraph of
-    * production query #2 (CS→CL→CSD) on the q46 fixture graph — "rank
-    * the entities related to the cell sets". The gate runs the bit-exact
-    * fold face; the catalog member's PRODUCTION default is the map-side
-    * path, spec-pinned ≤1e-12 against this face. Oracle = the q98 family
-    * over ArangoDB-style collection/key node handles. */
-  def q114RankRelatedEntities(s: SparkSession, dir: String): DataFrame = {
-    val (vertices, edges) = catalogGraph(s, dir)
-    QueryCatalog.rankRelatedEntities(vertices, edges,
-        queries = Seq(QueryCatalog.production(2)), exactFolds = true)
-      .orderBy("collection", "key")
   }
 
   /** SemDeDup gate: semantic dedup of the embeddings corpus — nearest-
@@ -5879,41 +5834,6 @@ object Queries {
        |FROM h$iters JOIN a$iters USING (node) ORDER BY node""".stripMargin
   }
 
-  /** The q114 oracle: the q98 seeded-PageRank recursion over the
-    * production-#2 phenotype subgraph (CS→CL→CSD on the q46 fixture),
-    * node identity = the ArangoDB-style collection/key handle. The
-    * sorted fold orders by the handle STRING — byte order for ASCII in
-    * both engines, so the replay stays cell-exact. */
-  private def q114Oracle(iters: Int): String = {
-    val oneMinusD = "(CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))"
-    val rounds = (1 to iters).map { i =>
-      s"""s$i AS MATERIALIZED (SELECT e.dst AS node,
-         |  list_sum(list(p.pr / CAST(d.deg AS DOUBLE) ORDER BY e.src)) AS s
-         | FROM e JOIN deg d USING (src) JOIN p${i - 1} p ON p.node = e.src
-         | GROUP BY e.dst),
-         |p$i AS MATERIALIZED (SELECT n.node,
-         |  CASE WHEN n.node LIKE 'CS/%' THEN $oneMinusD
-         |   ELSE CAST(0 AS DOUBLE) END
-         |   + CAST(0.85 AS DOUBLE) * coalesce(s.s, CAST(0 AS DOUBLE)) AS pr
-         | FROM nodes n LEFT JOIN s$i s USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH cust AS MATERIALIZED (SELECT CAST(c_custkey AS BIGINT) AS c FROM customer),
-       |e AS MATERIALIZED (
-       | SELECT DISTINCT 'CS/' || CAST(c AS VARCHAR) AS src,
-       |  'CL/' || CAST(c % 200 AS VARCHAR) AS dst FROM cust
-       | UNION
-       | SELECT DISTINCT 'CL/' || CAST(c % 200 AS VARCHAR),
-       |  'CSD/' || CAST((c % 200) % 40 AS VARCHAR) FROM cust),
-       |deg AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
-       |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-       |p0 AS MATERIALIZED (SELECT node, CASE WHEN node LIKE 'CS/%' THEN CAST(1 AS DOUBLE)
-       | ELSE CAST(0 AS DOUBLE) END AS pr FROM nodes),
-       |$rounds
-       |SELECT split_part(node, '/', 1) AS collection,
-       | split_part(node, '/', 2) AS key, pr AS rank
-       |FROM p$iters ORDER BY collection, key""".stripMargin
-  }
-
   /** The q113 oracle: power-iteration rounds unrolled — in-neighbor
     * sorted-fold sum, then renormalize by the round max (fold-order-free,
     * division exact — see GraphAlgos.eigenvectorCentrality). */
@@ -6137,7 +6057,6 @@ object Queries {
     "q50_near_dup_components" -> (q50NearDupComponents _),
     "q51_deterministic_split" -> (q51DeterministicSplit _),
     "q52_redact" -> (q52Redact _),
-    "q53_bucketed_catalog" -> (q53BucketedCatalog _),
     "q54_decontaminate" -> (q54Decontaminate _),
     "q55_pack_sequences" -> (q55PackSequences _),
     "q56_stratified_sample" -> (q56StratifiedSample _),
@@ -6170,7 +6089,6 @@ object Queries {
     "q79_fuzzy_decontaminate" -> (q79FuzzyDecontaminate _),
     "q80_approx_distinct" -> (q80ApproxDistinct _),
     "q81_sessionize_chunked" -> (q81SessionizeChunked _),
-    "q82_bucketed_hierarchy" -> (q82BucketedHierarchy _),
     "q83_grouped_kll_bound" -> (q83GroupedKllBound _),
     "q84_gopher_filter" -> (q84GopherFilter _),
     "q85_components_star" -> (q85ComponentsStar _),
@@ -6202,7 +6120,6 @@ object Queries {
     "q111_bm25_append" -> (q111Bm25Append _),
     "q112_weighted_hits" -> (q112WeightedHits _),
     "q113_eigenvector_centrality" -> (q113EigenvectorCentrality _),
-    "q114_rank_related_entities" -> (q114RankRelatedEntities _),
     "q115_semantic_dedup" -> (q115SemanticDedup _),
     "q116_kcore" -> (q116KCore _),
     "q117_bm25_replay" -> (q117Bm25ReplayedIngest _),
@@ -6650,11 +6567,6 @@ object Queries {
         |  'https?://[^ ]+', '<URL>', 'g'),
         | '[0-9]{6,}', '<NUM>', 'g') AS redacted
         |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "q53_bucketed_catalog" ->
-      """WITH cust AS (SELECT CAST(c_custkey AS BIGINT) AS c FROM customer)
-        |SELECT 'p1' AS q, CAST(c AS VARCHAR) || '|' || CAST(c % 200 AS VARCHAR)
-        | || '|' || CAST((c % 200) % 40 AS VARCHAR) AS val FROM cust
-        |ORDER BY q, val""".stripMargin,
     "q54_decontaminate" ->
       """WITH bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 40 = 0),
         |train AS (SELECT doc_id, text, source FROM documents WHERE doc_id % 40 <> 0),
@@ -7817,7 +7729,6 @@ object Queries {
     * against the identical expected output. */
   val oracles: Map[String, String] = oraclesLiteral ++ Map(
     "q81_sessionize_chunked" -> oraclesLiteral("q68_sessionize"),
-    "q82_bucketed_hierarchy" -> oraclesLiteral("q46b_catalog_hierarchy"),
     "q85_components_star" -> oraclesLiteral("q50_near_dup_components"),
     "q86_decontaminate_bloom" -> oraclesLiteral("q54_decontaminate"),
     "q87_sq_topk" ->
@@ -8025,7 +7936,6 @@ object Queries {
     "q103_weighted_pagerank" -> pageRankOracle(5, weighted = true),
     "q112_weighted_hits" -> hitsOracle(4, weighted = true),
     "q113_eigenvector_centrality" -> eigenOracle(5),
-    "q114_rank_related_entities" -> q114Oracle(5),
     "q116_kcore" -> kCoreOracle(14, 16),
     "q126_label_propagation" -> lpaOracle(4),
     "q127_weighted_lpa" -> lpaOracle(4, weighted = true),

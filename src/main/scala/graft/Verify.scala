@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.FileUtil
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -22,9 +23,15 @@ object Verify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a gate that throws writes nothing, so no earlier output may stand
+    // in for it: a full run starts from an empty outDir (no dir of a
+    // removed gate survives either), a selective one clears each
+    // selected gate's dir before the gate runs
+    if (only.isEmpty) FileUtil.fullyDelete(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
+      FileUtil.fullyDelete(new java.io.File(s"$outDir/$name"))
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -33,6 +33,9 @@ import org.apache.spark.sql.functions._
  *    per start, ties broken by the smallest `(to_coll, to_key)` at each
  *    step — no per-level Spark job.
  *
+ * [[kHop]] and [[withHierarchy]] are the only path executor;
+ * `QueryCatalog.PathQuery.run` composes them.
+ *
  * At 100 TB: the anchor collection (CS in the reference) is tiny and the
  * hop-1 join broadcasts it; ontology-sized collections shuffle on
  * (collection, key), which is exactly the layout the partitioned edge table
@@ -45,19 +48,18 @@ object PathQueries {
 
   /** Undirected view of an edge table: each edge appears in both
     * orientations, tagged with a canonical undirected id for
-    * `uniqueEdges: path` enforcement and its orientation ('f'/'r') so a
-    * directed (OUTBOUND) view can be recovered from a persisted copy. */
+    * `uniqueEdges: path` enforcement. */
   def undirected(edges: DataFrame): DataFrame = {
     val eid = concat_ws("|",
       col("from_coll"), col("from_key"), col("to_coll"), col("to_key"))
     val fwd = edges.select(
       col("from_coll").as("src_coll"), col("from_key").as("src_key"),
       col("to_coll").as("dst_coll"), col("to_key").as("dst_key"),
-      col("label"), eid.as("eid"), lit("f").as("orient"))
+      col("label"), eid.as("eid"))
     val rev = edges.select(
       col("to_coll").as("src_coll"), col("to_key").as("src_key"),
       col("from_coll").as("dst_coll"), col("from_key").as("dst_key"),
-      col("label"), eid.as("eid"), lit("r").as("orient"))
+      col("label"), eid.as("eid"))
     fwd.unionByName(rev)
   }
 
@@ -127,76 +129,6 @@ object PathQueries {
     paths.select(col("vs").as("vertices"), col("es").as("edges"))
   }
 
-  /**
-   * k-hop ANY path enumeration over the bucketed hop-table layout written
-   * by `GraphStore.writeHopTables` — the 100 TB-scale variant of [[kHop]]:
-   * the (huge) edge table NEVER shuffles.
-   *
-   * Layout contract: `<prefix>_by_src` and `<prefix>_by_dst` are the same
-   * undirected edge view, bucketed+sorted by (src_coll, src_key) and
-   * (dst_coll, dst_key) respectively with equal bucket counts.
-   *
-   *  - hop 1 is just the `by_dst` scan (src_coll = anchor): its rows
-   *    arrive hash-partitioned on (dst_coll, dst_key) — which IS hop 2's
-   *    join key, so a 2-hop plan runs with ZERO shuffle exchanges
-   *    (plan-asserted in QueryCatalogSpec);
-   *  - every later hop reads `by_src`, already partitioned on its join
-   *    key: only the (small, growing) path side ever re-shuffles, the
-   *    edge scan side never does.
-   *
-   * Requires every edge endpoint to exist in the vertex table (true for
-   * GraphStore-written graphs), under which it is result-identical to
-   * [[kHop]] (spec-pinned). */
-  def kHopBucketed(spark: SparkSession, prefix: String, anchor: String,
-                   hops: Seq[Hop]): DataFrame = {
-    require(hops.nonEmpty && hops.size <= 5, "reference queries are 1..5 hops")
-    val bySrc = spark.table(s"${prefix}_by_src")
-    val byDst = spark.table(s"${prefix}_by_dst")
-
-    val collAt: Int => String = i => if (i < 0) anchor else hops(i)
-    val pairSets = hops.indices.map(i => Set(collAt(i - 1), collAt(i)))
-    val needEids = pairSets.distinct.size < pairSets.size
-
-    val h1 = byDst.filter(col("src_coll") === anchor &&
-      col("dst_coll") === hops.head)
-    var paths = {
-      val base = h1.select(
-        Seq(
-          array(
-            struct(col("src_coll").as("collection"), col("src_key").as("key")),
-            struct(col("dst_coll").as("collection"), col("dst_key").as("key"))).as("vs"),
-          array(struct(
-            col("src_coll").as("from_coll"), col("src_key").as("from_key"),
-            col("dst_coll").as("to_coll"), col("dst_key").as("to_key"),
-            col("label"))).as("es"),
-          col("dst_coll").as("cur_coll"), col("dst_key").as("cur_key")) ++
-        (if (needEids) Seq(array(col("eid")).as("eids")) else Nil): _*)
-      base
-    }
-    hops.drop(1).zipWithIndex.foreach { case (hopColl, i0) =>
-      val slice = bySrc.filter(col("src_coll") === hops(i0) &&
-        col("dst_coll") === hopColl)
-      val joined = paths.join(slice,
-        paths("cur_coll") === slice("src_coll") &&
-        paths("cur_key") === slice("src_key"))
-      val filtered =
-        if (needEids) joined.filter(!array_contains(col("eids"), col("eid")))
-        else joined
-      paths = filtered.select(
-        Seq(
-          concat(col("vs"), array(struct(
-            col("dst_coll").as("collection"), col("dst_key").as("key")))).as("vs"),
-          concat(col("es"), array(struct(
-            col("src_coll").as("from_coll"), col("src_key").as("from_key"),
-            col("dst_coll").as("to_coll"), col("dst_key").as("to_key"),
-            col("label")))).as("es"),
-          col("dst_coll").as("cur_coll"), col("dst_key").as("cur_key")) ++
-        (if (needEids) Seq(concat(col("eids"), array(col("eid"))).as("eids"))
-         else Nil): _*)
-    }
-    paths.select(col("vs").as("vertices"), col("es").as("edges"))
-  }
-
   /** One hierarchy tail: the vertices and edges it appends to a path,
     * field for field as [[kHop]] writes them. */
   private[graft] final case class TailVertex(collection: String, key: String)
@@ -235,22 +167,6 @@ object PathQueries {
                     maxDepth: Int = 64): DataFrame =
     hierarchyWalk(basePaths, edges.filter(col("label") === label)
       .select(col("from_coll"), col("from_key"), col("to_coll"), col("to_key")),
-      label, maxDepth)
-
-  /** [[withHierarchy]] over the edge collection `fromColl-toColl`, with
-    * its slice read from the bucketed `<prefix>_by_src` hop table
-    * (GraphStore.writeHopTables layout): the directed rows
-    * (`orient = 'f'`) of the collection pair and the label, pushed to the
-    * scan. Result ≡ [[withHierarchy]] on the same collection pair's edges
-    * (spec-pinned through `PathQuery.runBucketed` ≡ `run`). */
-  def withHierarchyBucketed(spark: SparkSession, prefix: String,
-                            basePaths: DataFrame, fromColl: String,
-                            toColl: String, label: String,
-                            maxDepth: Int = 64): DataFrame =
-    hierarchyWalk(basePaths, spark.table(s"${prefix}_by_src")
-      .filter(col("orient") === "f" && col("src_coll") === fromColl &&
-        col("dst_coll") === toColl && col("label") === label)
-      .select(col("src_coll"), col("src_key"), col("dst_coll"), col("dst_key")),
       label, maxDepth)
 
   /** The hierarchy walk over a `(from_coll, from_key, to_coll, to_key)`

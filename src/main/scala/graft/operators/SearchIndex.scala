@@ -131,14 +131,13 @@ object SearchIndex {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
 
   /** The reference's full refresh sequence (delete analyzers + views,
-    * recreate both) collapses to drop + overwrite-create. */
+    * recreate both) is [[createView]], which already drops the table and
+    * deletes its directory before it writes. */
   def recreateView(df: DataFrame, idCols: Seq[String],
                    fields: Map[String, Column => Column], table: String,
                    buckets: Int = 16,
-                   collections: Option[Seq[String]] = None): Unit = {
-    dropView(df.sparkSession, table)
+                   collections: Option[Seq[String]] = None): Unit =
     createView(df, idCols, fields, table, buckets, collections)
-  }
 
   // -----------------------------------------------------------------
   // Phrase search — ArangoSearch PHRASE() over positional postings

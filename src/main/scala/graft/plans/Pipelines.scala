@@ -14,10 +14,9 @@ import graft.sources.{GraphStore, OwlSource}
  *  - [[loadOntology]] = OntologyParserLoader.main (parse → triple-type
  *    census → de-reify → property-graph build → store), the flow the
  *    reference drives per ontology release;
- *  - the store step also lays down the scale artifacts the query side
- *    consumes: partitioned vertex/edge tables (partition pruning is the
- *    index), the bucketed hop tables (shuffle-free hop joins), and the
- *    token search view (ArangoDbUtilities' analyzers/views).
+ *  - the store step also lays down what the query side reads:
+ *    partitioned vertex/edge tables (partition pruning is the index) and
+ *    the token search view (ArangoDbUtilities' analyzers/views).
  *
  * Everything here is a composition of already-spec'd operators; the
  * pipeline spec replays macrophage.owl+ro.owl through the whole chain
@@ -42,16 +41,12 @@ object Pipelines {
    * @param roPath      relation-ontology OWL providing predicate labels
    * @param storePath   when set, vertices/edges land as partitioned
    *                    parquet under `<storePath>/vertices|edges`
-   * @param hopPrefix   when set, the bucketed by_src/by_dst hop tables
-   *                    are written for `PathQueries.kHopBucketed`
    * @param searchView  when set, a token search view over the vertex
    *                    terms (edge-ngram analyzer) is (re)created
    */
   def loadOntology(spark: SparkSession, clPaths: Seq[String], roPath: String,
                    storePath: Option[String] = None,
-                   hopPrefix: Option[String] = None,
-                   searchView: Option[String] = None,
-                   hopBuckets: Int = 64): OntologyLoad = {
+                   searchView: Option[String] = None): OntologyLoad = {
     val raw = OwlSource.readOwl(spark, clPaths: _*)
     val ro = Dereify.labels(OwlSource.readOwl(spark, roPath)).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
@@ -71,7 +66,6 @@ object Pipelines {
       GraphStore.writeVertices(vertices, s"$p/vertices")
       GraphStore.writeEdges(edges, s"$p/edges")
     }
-    hopPrefix.foreach(GraphStore.writeHopTables(edges, hopBuckets, _))
     searchView.foreach { t =>
       // searchable text = the term id plus every label-attribute value
       // (the reference's view links index the display fields,
@@ -91,11 +85,14 @@ object Pipelines {
   /**
    * Results-graph build — ResultsGraphBuilder.java's main flow: writer
    * tuples → vertex/edge tables (A1 first-wins vertices, A2 first-label
-   * edges, F8 collection whitelist) → persisted graph + hop tables, then
-   * the production path-query catalog runs against it
+   * edges, F8 collection whitelist) → persisted graph, then the
+   * production path-query catalog runs against it
    * (PhenotypeGraphBuilder.java:48-223).
    *
    * @param tuples   (s, p, o, lit, ord) rows from any tuple writer
+   * @param hopPrefix when set, `GraphStore.writeHopTables` writes the
+   *                 `<prefix>_by_src`/`_by_dst` tables (`hopBuckets`
+   *                 buckets); no program code reads them
    * @param queries  catalog instantiations to materialize (defaults to
    *                 the phenotype subgraph over the full production set)
    * @return (vertices, edges, subgraphVertices, subgraphEdges)

@@ -6,10 +6,11 @@ import graft.operators.PathQueries
 
 /**
  * The reference's external query surface as data (SURVEY.md §2.7): a
- * `PathQuery` spec compiled onto the iterative join executor, and the 25
- * production instantiations (the reference's 24,
- * PhenotypeGraphBuilder.java:50-92, plus the 1-hop BGS query) and the
- * phenotype-subgraph materialization (:117-157).
+ * `PathQuery` spec, the 25 production instantiations (the reference's
+ * 24, PhenotypeGraphBuilder.java:50-92, plus the 1-hop BGS query) and
+ * the phenotype-subgraph materialization (:117-157). `PathQuery.run`
+ * (`PathQueries.kHop`, then `PathQueries.withHierarchy` for a tail) is
+ * the one way to run a path query.
  *
  * Every production query anchors at the cell-set collection CS and walks
  * ANY-direction hops; hierarchy tails walk OUTBOUND over one edge label
@@ -43,23 +44,6 @@ object QueryCatalog {
           PathQueries.withHierarchy(base,
             edges.filter(col("from_coll") === from && col("to_coll") === to),
             label, maxDepth)
-        case None => base
-      }
-    }
-
-    /** Scale path: run over the bucketed hop tables written by
-      * `GraphStore.writeHopTables(edges, buckets, prefix)` — the edge
-      * table never shuffles (see kHopBucketed). Result-identical to
-      * [[run]] on the same graph. The hierarchy walk reads its slice
-      * from the by_src table (orient = 'f', the edge collection and the
-      * label pushed to the bucketed scan;
-      * PathQueries.withHierarchyBucketed). */
-    def runBucketed(spark: org.apache.spark.sql.SparkSession, prefix: String,
-                    maxDepth: Int = 64): DataFrame = {
-      val base = PathQueries.kHopBucketed(spark, prefix, anchor, hops)
-      tail match {
-        case Some((from, to, label)) =>
-          PathQueries.withHierarchyBucketed(spark, prefix, base, from, to, label, maxDepth)
         case None => base
       }
     }
@@ -104,39 +88,6 @@ object QueryCatalog {
     PathQuery("CS", Seq("CL", "GS", "RS", "CHEMBL", "MONDO")),
     PathQuery("CS", Seq("CL", "GS", "RS", "CHEMBL", "PR"))
   )
-
-  /** "Rank the entities related to the cell sets" — the global-analytics
-    * catalog member over the graph [[phenotypeSubgraph]] materializes:
-    * personalized PageRank with the reset mass confined to the
-    * `seedCollection` vertices, so scores measure proximity to the cell
-    * sets a Cell KN user starts from (the subgraph exists precisely to
-    * serve such queries; PhenotypeGraphBuilder.java:48-109).
-    *
-    * Node identity is the ArangoDB-style `collection/key` handle (an
-    * Arango `_key` cannot contain '/', so the join-back split is exact).
-    * PRODUCTION DEFAULT is the map-side-combined fold
-    * (`exactFolds = false` — a celebrity ontology term must never build
-    * a collect_list array); the bit-exact face exists for gates and
-    * cross-engine replay only (gate q114 runs it; the spec pins the two
-    * faces ≤1e-12 apart on the fixture graph). */
-  def rankRelatedEntities(vertices: DataFrame, edges: DataFrame,
-                          seedCollection: String = "CS",
-                          iterations: Int = 5, damping: Double = 0.85,
-                          queries: Seq[PathQuery] = production,
-                          exactFolds: Boolean = false): DataFrame = {
-    val (sv, se) = phenotypeSubgraph(vertices, edges, queries)
-    val e = se.select(
-      concat_ws("/", col("from_coll"), col("from_key")).as("src"),
-      concat_ws("/", col("to_coll"), col("to_key")).as("dst"))
-    val seeds = sv.filter(col("collection") === seedCollection)
-      .select(concat_ws("/", col("collection"), col("key")).as("node"))
-    graft.operators.GraphAlgos
-      .personalizedPageRank(e, seeds, iterations, damping,
-        exactFolds = exactFolds)
-      .select(split(col("node"), "/").getItem(0).as("collection"),
-        split(col("node"), "/").getItem(1).as("key"),
-        col("pr").as("rank"))
-  }
 
   /** Phenotype-graph materialization: run every query, union the paths,
     * dedup vertices/edges, enrich vertex docs from the ontology vertex

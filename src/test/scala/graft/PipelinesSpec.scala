@@ -8,7 +8,7 @@ import graft.operators.{PathQueries, SearchIndex}
 import graft.sources.GraphStore
 
 /** End-to-end OntologyParserLoader.main twin: parse → census → dereify →
-  * graph → store (+ hop tables + search view), replayed over the
+  * graph → store (+ search view), replayed over the
   * reference's committed macrophage.owl/ro.owl and round-tripped. */
 class PipelinesSpec extends SparkSpec {
   import spark.implicits._
@@ -19,8 +19,7 @@ class PipelinesSpec extends SparkSpec {
     val store = Files.createTempDirectory("ont-store").toString
     val load = Pipelines.loadOntology(spark,
       Seq(s"$obo/macrophage.owl"), s"$obo/ro.owl",
-      storePath = Some(store), hopPrefix = Some("pipe_hops"),
-      searchView = Some("pipe_search"), hopBuckets = 4)
+      storePath = Some(store), searchView = Some("pipe_search"))
 
     // graph content matches the golden chain (MacrophageGoldenSpec pins
     // exact values; here: the flagship vertex + non-empty edges)
@@ -37,9 +36,8 @@ class PipelinesSpec extends SparkSpec {
     val eBack = GraphStore.readEdges(spark, s"$store/edges")
     assert(eBack.count() == load.edges.count())
 
-    // hop tables serve a path query over the stored graph
-    val hops = PathQueries.kHopBucketed(spark, "pipe_hops", "CL", Seq("CL"))
-    assert(hops.count() > 0)
+    // the stored graph serves a path query
+    assert(PathQueries.kHop(vBack, eBack, "CL", Seq("CL")).count() > 0)
 
     // the search view finds the macrophage vertex by term prefix
     val hits = SearchIndex.search(spark.table("pipe_search"), Seq("macroph"))
@@ -65,8 +63,19 @@ class PipelinesSpec extends SparkSpec {
     // collections; its subgraph covers the whole chain
     assert(sv.count() == 3 && se.count() == 2)
     assert(GraphStore.readEdges(spark, s"$store/edges").count() == 2)
-    assert(PathQueries.kHopBucketed(spark, "res_hops", "CS", Seq("CL", "CSD"))
-      .count() == 1)
+    // each hop table holds both orientations of every edge, bucketed on
+    // its own endpoint
+    val ends = e.select("from_coll", "from_key", "to_coll", "to_key")
+      .as[(String, String, String, String)].collect()
+    val both = (ends ++ ends.map { case (fc, fk, tc, tk) => (tc, tk, fc, fk) }).sorted.toSeq
+    for ((side, bucketCols) <- Seq("src" -> Seq("src_coll", "src_key"),
+                                  "dst" -> Seq("dst_coll", "dst_key"))) {
+      val t = s"res_hops_by_$side"
+      assert(spark.table(t).select("src_coll", "src_key", "dst_coll", "dst_key")
+        .as[(String, String, String, String)].collect().sorted.toSeq == both)
+      assert(spark.catalog.listColumns(t).collect().filter(_.isBucket).map(_.name)
+        .toSeq == bucketCols)
+    }
   }
 
   test("curateCorpus drops exactly one doc per stage on a crafted corpus") {
